@@ -1889,7 +1889,7 @@ def _propagate_min_labels_edges(
             f"within {max_iterations} iterations"
         )
     # symmetrize in ONE scan (r14): the former two-branch union re-ran the
-    # caller's whole pair subtree (parquet read + ledger semi-join) once
+    # caller's whole pair subtree (parquet read + committed-epoch filter) once
     # per direction to materialize this checkpoint; inline_outer emits both
     # directions from a single pass, map-only
     sym = pairs.select(
@@ -2012,21 +2012,26 @@ def near_dup_survivors(
 
 
 def _committed_rows_nodedup(spark, rows_path: str, epochs_path: str, empty_schema: str):
-    """Ledger-gated rows WITHOUT the committed view's dedup shuffle — for
-    the CC readers below, where row MULTIPLICITY cannot change the fixed
+    """Rows of committed epochs WITHOUT the committed view's dedup shuffle —
+    for the CC readers below, where row MULTIPLICITY cannot change the fixed
     point: a replayed epoch appends identical edge/membership rows, and
     min-label propagation over a multigraph labels exactly like the
     simple graph. Crash leftovers (rows of uncommitted epochs) are still
-    excluded by the ledger semi-join — those COULD add edges that merge
-    components, so the semi-join is the correctness line; the dedup was
-    only ever a (harmless, but corpus-pair-sized) shuffle here."""
-    from demo_bigdata_spark.streaming.pipeline import _read_parquet_if_exists
+    excluded — those COULD add edges that merge components, so the
+    committed-epoch filter is the correctness line; the dedup was only
+    ever a (harmless, but corpus-pair-sized) shuffle here. As in
+    ``committed_view``, the ledger is read when the reader is built and
+    becomes a plan-time ``epoch_id IN (...)`` filter."""
+    from demo_bigdata_spark.streaming.pipeline import (
+        _read_parquet_if_exists,
+        ledger_epochs,
+    )
 
-    ledger = _read_parquet_if_exists(spark, epochs_path)
+    epochs = ledger_epochs(epochs_path)
     rows = _read_parquet_if_exists(spark, rows_path)
-    if rows is None or ledger is None:
+    if rows is None or epochs is None:
         return spark.createDataFrame([], empty_schema)
-    return rows.join(ledger, "epoch_id", "left_semi")
+    return rows.filter(F.col("epoch_id").isin(epochs))
 
 
 def read_dedup_survivors(spark, index_path: str, max_iterations: int = 64) -> DataFrame:

@@ -169,9 +169,9 @@ def read_positional_postings(
     spark: SparkSession, path: str, id_col: str = "doc_id"
 ) -> DataFrame:
     """Committed view of an incrementally-maintained positional index:
-    rows semi-joined to the epoch ledger, deduplicated on
-    (doc, term, epoch) — replays write identical rows, so the dedup is
-    exact. Bucket/term predicates push below the broadcast ledger join."""
+    rows of committed epochs, deduplicated on (doc, term, epoch) —
+    replays write identical rows, so the dedup is exact. Bucket/term
+    predicates push into the scan."""
     from demo_bigdata_spark.streaming.pipeline import committed_view
 
     return committed_view(
@@ -204,11 +204,11 @@ def phrase_search(
     never match. Pass ``postings=`` to override."""
     if not phrase:
         raise ValueError("phrase must be non-empty")
-    from demo_bigdata_spark.streaming.pipeline import _read_parquet_if_exists
+    from demo_bigdata_spark.streaming.pipeline import ledger_epochs
 
     buckets = sorted({python_term_bucket(t, n_buckets) for t in phrase})
     if postings is None:
-        if _read_parquet_if_exists(spark, path + "_epochs") is not None:
+        if ledger_epochs(path + "_epochs") is not None:
             postings = read_positional_postings(spark, path, id_col)
         else:
             postings = spark.read.parquet(path)
@@ -295,7 +295,7 @@ def append_postings(
 
 def read_postings(spark: SparkSession, path: str, id_col: str = "doc_id") -> DataFrame:
     """Committed view of an incrementally-maintained postings table
-    (streaming.pipeline.committed_view): ledger semi-join + exact dedup.
+    (streaming.pipeline.committed_view): committed-epoch filter + exact dedup.
     term_bucket is IN the dedup keys even though it is determined by term:
     dropDuplicates is an Aggregate, and only grouping columns let a
     caller's bucket predicate push through to the partitioned scan —
@@ -314,13 +314,13 @@ def read_postings(spark: SparkSession, path: str, id_col: str = "doc_id") -> Dat
 def read_doclens(spark: SparkSession, path: str, id_col: str = "doc_id") -> DataFrame:
     """Committed view of the doclens side table: same ledger semantics as
     read_postings (no ledger = batch-built index, read as-is)."""
-    from demo_bigdata_spark.streaming.pipeline import _read_parquet_if_exists
+    from demo_bigdata_spark.streaming.pipeline import ledger_epochs
 
+    epochs = ledger_epochs(path + "_epochs")
     rows = spark.read.parquet(path + "/doclens")
-    ledger = _read_parquet_if_exists(spark, path + "_epochs")
-    if ledger is None:
+    if epochs is None:
         return rows
-    return rows.join(ledger, "epoch_id", "left_semi").dropDuplicates(
+    return rows.filter(F.col("epoch_id").isin(epochs)).dropDuplicates(
         [id_col, "epoch_id"]
     )
 
@@ -382,12 +382,12 @@ def bm25_rank_indexed(
     otherwise double-count df_t / n_hits / term scores. A batch-built
     index (no ledger) reads the files directly. Pass ``postings=`` to
     override either way (conjunctive_search's contract)."""
-    from demo_bigdata_spark.streaming.pipeline import _read_parquet_if_exists
+    from demo_bigdata_spark.streaming.pipeline import ledger_epochs
 
     uniq = sorted(set(terms))
     buckets = sorted({python_term_bucket(t, n_buckets) for t in uniq})
     if postings is None:
-        if _read_parquet_if_exists(spark, path + "_epochs") is not None:
+        if ledger_epochs(path + "_epochs") is not None:
             postings = read_postings(spark, path, id_col)
         else:
             postings = spark.read.parquet(path + "/postings")

@@ -860,12 +860,12 @@ def multi_query_ivf_topk_indexed(
     shape: Q queries amortize one pruned scan and zero assignment
     recompute. Honors the epoch-ledger committed view like the
     single-query probe."""
-    from demo_bigdata_spark.streaming.pipeline import _read_parquet_if_exists
+    from demo_bigdata_spark.streaming.pipeline import ledger_epochs
 
     qids, Q, Qn, allowed, union = _multi_query_probes(
         centroids, query_vecs, n_probe
     )
-    if _read_parquet_if_exists(spark, index_path + "_epochs") is not None:
+    if ledger_epochs(index_path + "_epochs") is not None:
         assigned = read_ivf_index(spark, index_path, id_col)
     else:
         assigned = spark.read.parquet(index_path)
@@ -906,13 +906,13 @@ def ivf_topk_indexed(
     On an incrementally-maintained index (an ``_epochs`` ledger exists,
     see ``append_vectors``) the committed view is read instead —
     uncommitted crash-window vectors never appear in results."""
-    from demo_bigdata_spark.streaming.pipeline import _read_parquet_if_exists
+    from demo_bigdata_spark.streaming.pipeline import ledger_epochs
 
     q = np.asarray(query_vec, dtype=np.float64)
     Cn = centroids / np.maximum(np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12)
     qn = q / max(np.linalg.norm(q), 1e-12)
     probes = [int(i) for i in np.argsort(-(Cn @ qn))[:n_probe]]
-    if _read_parquet_if_exists(spark, index_path + "_epochs") is not None:
+    if ledger_epochs(index_path + "_epochs") is not None:
         assigned = read_ivf_index(spark, index_path, id_col)
     else:
         assigned = spark.read.parquet(index_path)
@@ -1158,7 +1158,7 @@ def append_vectors(
 
 def read_ivf_index(spark, index_path: str, id_col: str = "vec_id") -> DataFrame:
     """Committed view of an incrementally-maintained IVF index
-    (streaming.pipeline.committed_view): ledger semi-join + exact dedup.
+    (streaming.pipeline.committed_view): committed-epoch filter + exact dedup.
     ``cluster`` is in the dedup keys (functionally dependent on the
     vector, so semantics are unchanged) because dropDuplicates is an
     Aggregate and only grouping columns let the probe's cluster predicate
@@ -1239,7 +1239,7 @@ def append_pq_vectors(
 
 def read_ivf_pq_index(spark, index_path: str, id_col: str = "vec_id") -> DataFrame:
     """Committed view of an incrementally-maintained IVF-PQ index —
-    ledger semi-join + exact dedup, ``cluster`` in the dedup keys so the
+    committed-epoch filter + exact dedup, ``cluster`` in the dedup keys so the
     probe's partition pruning still fires (same rationale as
     ``read_ivf_index``)."""
     from demo_bigdata_spark.streaming.pipeline import committed_view
@@ -1277,7 +1277,7 @@ def ivf_pq_topk_indexed(
 
     On an incrementally-maintained index (``_epochs`` ledger exists) the
     committed view is read — crash-window rows never appear."""
-    from demo_bigdata_spark.streaming.pipeline import _read_parquet_if_exists
+    from demo_bigdata_spark.streaming.pipeline import ledger_epochs
 
     q = np.asarray(query_vec, dtype=np.float64)
     Cn = centroids / np.maximum(
@@ -1285,7 +1285,7 @@ def ivf_pq_topk_indexed(
     )
     qn = q / max(np.linalg.norm(q), 1e-12)
     probes = [int(i) for i in np.argsort(-(Cn @ qn))[:n_probe]]
-    if _read_parquet_if_exists(spark, index_path + "_epochs") is not None:
+    if ledger_epochs(index_path + "_epochs") is not None:
         enc = read_ivf_pq_index(spark, index_path, id_col)
     else:
         enc = spark.read.parquet(index_path)
@@ -1328,7 +1328,7 @@ def multi_query_pq_topk_indexed(
     from pyspark.sql import Window
     from pyspark.sql import types as T
 
-    from demo_bigdata_spark.streaming.pipeline import _read_parquet_if_exists
+    from demo_bigdata_spark.streaming.pipeline import ledger_epochs
 
     qids, Q, Qn, allowed, union = _multi_query_probes(
         centroids, query_vecs, n_probe
@@ -1344,7 +1344,7 @@ def multi_query_pq_topk_indexed(
     lut_sq = (CB**2).sum(axis=2)  # (m, ks)
     idx = np.arange(m)
 
-    if _read_parquet_if_exists(spark, index_path + "_epochs") is not None:
+    if ledger_epochs(index_path + "_epochs") is not None:
         enc = read_ivf_pq_index(spark, index_path, id_col)
     else:
         enc = spark.read.parquet(index_path)
@@ -2087,7 +2087,7 @@ def read_knn_clusters(
 
 def read_knn_graph(spark, graph_path: str, k: int, id_col: str = "vec_id") -> DataFrame:
     """Current kNN graph from the incrementally-maintained edge set:
-    committed view (ledger semi-join + replay dedup) then the same
+    committed view (committed-epoch filter + replay dedup) then the same
     deterministic per-src (cosine desc, dst asc) window knn_graph_ivf
     ends with. ``k`` must match the maintenance calls.
 
@@ -2174,18 +2174,12 @@ def compact_knn_graph(
     harmless (each run commits a fresh epoch; reads are correct at every
     point).
     """
-    from demo_bigdata_spark.streaming.pipeline import (
-        _read_parquet_if_exists,
-        commit_epoch,
-    )
+    from demo_bigdata_spark.streaming.pipeline import commit_epoch, ledger_epochs
 
     epochs_path = graph_path + "_epochs"
-    ledger = _read_parquet_if_exists(spark, epochs_path)
-    if ledger is None:
-        return  # nothing committed yet
-    committed = [r["epoch_id"] for r in ledger.select("epoch_id").distinct().collect()]
+    committed = ledger_epochs(epochs_path)
     if not committed:
-        return
+        return  # nothing committed yet
     ce = min(0, min(committed)) - 1
 
     compacted = (
@@ -2225,11 +2219,7 @@ def compact_knn_graph(
         # (e.g. a batch that wrote rows but has not committed yet), never
         # just epoch_id == ce. Snapshot epochs are exactly what the ce
         # rows subsume, so only those are safe to drop.
-        ledger_now = _read_parquet_if_exists(spark, epochs_path)
-        committed_now = {
-            r["epoch_id"]
-            for r in ledger_now.select("epoch_id").distinct().collect()
-        }
+        committed_now = set(ledger_epochs(epochs_path))
         if committed_now - set(committed) - {ce}:
             return  # new epochs landed mid-compaction: leave files intact
         stale = [int(e) for e in committed]  # pre-compaction snapshot only
@@ -2285,15 +2275,12 @@ def knn_graph_compaction_due(graph_path: str, ratio: float = 3.0) -> dict:
     import pyarrow.dataset as pads
     import pyarrow.parquet as pq
 
-    epochs_path = graph_path + "_epochs"
-    if not os.path.isdir(epochs_path) or not os.path.isdir(graph_path):
+    from demo_bigdata_spark.streaming.pipeline import ledger_epochs
+
+    epochs = ledger_epochs(graph_path + "_epochs")
+    if epochs is None or not os.path.isdir(graph_path):
         return {"due": False, "reason": "no committed graph"}
-    committed = set(
-        pads.dataset(epochs_path, format="parquet")
-        .to_table(columns=["epoch_id"])
-        .column("epoch_id")
-        .to_pylist()
-    )
+    committed = set(epochs)
     if not committed:
         return {"due": False, "reason": "empty ledger"}
     compactions = [e for e in committed if e < 0]

@@ -494,8 +494,9 @@ def append_histogram_batch(
 
 def read_histogram(spark, path: str) -> DataFrame:
     """Committed (bin, n) sketch from the incrementally-maintained table:
-    ledger semi-join over the epoch-partitioned layout (no dedup shuffle —
-    see committed_view_epoch_partitioned), then the exact integer re-sum."""
+    committed-epoch partition filter over the epoch-partitioned layout
+    (no dedup shuffle — see committed_view_epoch_partitioned), then the
+    exact integer re-sum."""
     from demo_bigdata_spark.streaming.pipeline import (
         committed_view_epoch_partitioned,
     )

@@ -732,10 +732,11 @@ def read_group_kl(
     spark, path: str, group_col: str = "source", top_v: int = 256, scale: int = 6
 ) -> DataFrame:
     """Per-group KL divergence from the incrementally-maintained count
-    table: committed view (ledger semi-join over the epoch-partitioned
-    layout — no dedup shuffle, see committed_view_epoch_partitioned) ->
-    exact integer re-sum per (group, token) -> the SAME vocab/OOV/KL tail
-    as the batch operator (:func:`_kl_from_counts`), so live == batch
+    table: committed view (committed-epoch partition filter over the
+    epoch-partitioned layout — no dedup shuffle, see
+    committed_view_epoch_partitioned) -> exact integer re-sum per
+    (group, token) -> the SAME vocab/OOV/KL tail as the batch operator
+    (:func:`_kl_from_counts`), so live == batch
     bit-for-bit at any epoch boundary — the streaming answer to 'which
     crawl snapshot shifted the mixture'."""
     from demo_bigdata_spark.streaming.pipeline import (

@@ -59,10 +59,14 @@ same commit discipline Iceberg uses:
   the chain fast-forward walks.
 
 Scale shape: manifests hold file PATHS + KB-scale metadata per snapshot,
-never data; a read plans ``spark.read.parquet(*files)`` over the pruned
-file set so pushdown/pruning work as on any parquet scan; the delete
-anti-join is keyed by the recorded key column and bounded by accumulated
-deletes (compaction folds them away — rewrite to a fresh snapshot via
+never data, and are read and written on the driver with pyarrow (as
+Iceberg keeps its metadata off the cluster): a commit or an applied-epoch
+check launches no Spark job of its own, and only :func:`table_files`
+exposes a manifest as a DataFrame. A read plans
+``spark.read.parquet(*files)`` over the pruned file set so
+pushdown/pruning work as on any parquet scan; the delete anti-join is
+keyed by the recorded key column and bounded by accumulated deletes
+(compaction folds them away — rewrite to a fresh snapshot via
 ``append_snapshot(read_table(...), replace=True)``).
 """
 
@@ -83,8 +87,10 @@ _PROPS = "_PROPERTIES"
 _STALE_CLAIM_SECONDS = 60.0
 _COMMIT_ATTEMPTS = 8
 # exponential-backoff envelope for the optimistic commit loop: a live
-# winner holds its claim for the DURATION of its manifest-write Spark job
-# (seconds), so the retry window must comfortably exceed a typical commit —
+# winner holds its claim while the driver writes the new manifest and
+# swaps the pointer (data files and the parent-manifest read come first) —
+# milliseconds on a local disk, more on slow storage or a loaded driver —
+# so the retry window must comfortably exceed a slow commit —
 # 0.05 * 2^i capped at 2 s sums to ~10 s across 8 attempts, vs the ~0.1 s a
 # fixed 20 ms sleep allowed (which surfaced CommitConflictError for routine
 # transient contention). Jitter decorrelates herds of retrying writers.
@@ -104,6 +110,45 @@ def _snap_dir(path: str) -> str:
 
 def _manifest_path(path: str, snap: int) -> str:
     return os.path.join(_snap_dir(path), f"{snap:08d}")
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file-index rule: ``.``-prefixed names (checksums, temporary
+    files) and ``_``-prefixed ones (``_SUCCESS``, ``_temporary``,
+    ``_commit.json``) are not data, except ``_k=v`` partition names."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _visible_files(path: str) -> list[str] | None:
+    """The files a Spark parquet scan of ``path`` would read, listed on the
+    driver: every file at any depth (partition directories such as
+    ``epoch_id=<k>`` are walked) with no hidden path component. Sorted;
+    None when ``path`` does not exist."""
+    if os.path.isfile(path):
+        return [path]
+    if not os.path.isdir(path):
+        return None
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        out.extend(os.path.join(root, f) for f in files if not _hidden(f))
+    return sorted(out)
+
+
+def _write_parquet_file(table, directory: str) -> str:
+    """Write a pyarrow ``table`` as one parquet file in ``directory``: a
+    hidden temporary file first, then ``os.replace`` to its visible name,
+    so a crash mid-write leaves only a file every reader skips. Returns the
+    file's path."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(directory, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(directory, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    final = os.path.join(directory, name)
+    os.replace(tmp, final)
+    return final
 
 
 def _claim_path(path: str, snap: int, branch: str = "main") -> str:
@@ -503,7 +548,6 @@ def _acquire_id(path: str, floor: int) -> tuple[int, str]:
 
 
 def _commit(
-    spark: SparkSession,
     path: str,
     snap: int,
     entries: list[tuple[str, str, int, str | None]],
@@ -524,12 +568,13 @@ def _commit(
       delete files. Scan planning reads it from the manifest instead of
       opening files.
 
-    The manifest write stays mode=overwrite (NOT error): a crash between
-    manifest write and pointer swap (or a rollback to an earlier snapshot)
-    leaves a stale, unreferenced manifest at the target id — the redo must
-    replace it or the table is permanently wedged on 'path already
-    exists'. Live-writer overwrites are excluded by the claim, not by the
-    write mode.
+    The manifest is one parquet file written on the driver with pyarrow
+    (:func:`_write_parquet_file`: hidden temporary file, then
+    ``os.replace``), entirely before the pointer swap. A stale directory
+    at the target id — a crash between manifest write and pointer swap, or
+    a rollback to an earlier snapshot — is unreferenced and is replaced,
+    or its entries would join the redo's. Live-writer overwrites are
+    excluded by the claim.
 
     ``snap`` is the commit SLOT (parent head + 1) — the per-branch claim
     key. The MANIFEST id actually written may be larger when other
@@ -547,11 +592,35 @@ def _commit(
         except FileNotFoundError:
             pass
         raise
-    seqd = [(f, k, e, i, m) for i, (f, k, e, m) in enumerate(entries)]
-    spark.createDataFrame(
-        seqd, "file string, kind string, epoch_id long, seq int, meta string"
-    ).coalesce(1).write.mode("overwrite").parquet(_manifest_path(path, nid))
-    with open(os.path.join(_manifest_path(path, nid), "_commit.json"), "w") as f:
+    import shutil
+
+    import pyarrow as pa
+
+    mdir = _manifest_path(path, nid)
+    if os.path.isdir(mdir):
+        shutil.rmtree(mdir)
+    # the columns and types manifests have always had (epoch_id long, seq
+    # int), so table_files and older readers see no difference
+    manifest = pa.table(
+        {
+            "file": [e[0] for e in entries],
+            "kind": [e[1] for e in entries],
+            "epoch_id": [e[2] for e in entries],
+            "seq": list(range(len(entries))),
+            "meta": [e[3] for e in entries],
+        },
+        schema=pa.schema(
+            [
+                ("file", pa.string()),
+                ("kind", pa.string()),
+                ("epoch_id", pa.int64()),
+                ("seq", pa.int32()),
+                ("meta", pa.string()),
+            ]
+        ),
+    )
+    _write_parquet_file(manifest, mdir)
+    with open(os.path.join(mdir, "_commit.json"), "w") as f:
         json.dump(
             {"branch": branch, "parent": snap - 1, "committed_at": time.time()},
             f,
@@ -565,7 +634,7 @@ def _commit(
     return nid
 
 
-def _retrying_commit(spark, path: str, build, branch: str = "main") -> int:
+def _retrying_commit(path: str, build, branch: str = "main") -> int:
     """Optimistic-concurrency loop (Iceberg's commit retry): re-read the
     branch head, rebuild the manifest entries against it, attempt the
     claimed commit; on conflict, loop. ``build(cur) -> entries`` must be
@@ -580,7 +649,7 @@ def _retrying_commit(spark, path: str, build, branch: str = "main") -> int:
         if cur is None:
             raise ValueError(f"no versioned table or branch {branch!r} at {path}")
         try:
-            return _commit(spark, path, cur + 1, build(cur), branch=branch)
+            return _commit(path, cur + 1, build(cur), branch=branch)
         except CommitConflictError as e:
             last = e
             delay = min(
@@ -601,11 +670,7 @@ def _write_files(df: DataFrame, path: str, kind: str) -> list[str]:
 
     d = os.path.join(path, kind, uuid.uuid4().hex)
     df.write.mode("error").parquet(d)
-    files = sorted(
-        os.path.join(d, f)
-        for f in os.listdir(d)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    )
+    files = _visible_files(d)
     # empty part files (written for empty partitions) carry no rows and
     # would sit in every future scan plan as permanent fail-open entries;
     # drop them from the manifest. An all-empty commit keeps ONE file as
@@ -760,27 +825,35 @@ def _range_condition(prune: dict):
     return cond
 
 
-def _read_manifest(spark: SparkSession, path: str, snap: int) -> DataFrame:
-    return spark.read.parquet(_manifest_path(path, snap))
+def _manifest_rows(path: str, snap: int) -> list[dict]:
+    """The manifest of snapshot ``snap`` as ``{file, kind, epoch_id, seq,
+    meta}`` dicts in commit (``seq``) order — the one manifest reader,
+    driver-side pyarrow, no Spark job. Reads manifests written by Spark's
+    writer and by :func:`_commit` alike (hidden files skipped); ``meta`` is
+    None on pre-stats manifests. Raises ValueError when the snapshot has no
+    manifest."""
+    import pyarrow.parquet as pq
+
+    files = _visible_files(_manifest_path(path, snap))
+    if not files:
+        raise ValueError(f"snapshot {snap} does not exist at {path}")
+    rows = [r for f in files for r in pq.ParquetFile(f).read().to_pylist()]
+    for r in rows:
+        r.setdefault("meta", None)
+    return sorted(rows, key=lambda r: r["seq"])
 
 
-def _manifest_rows(spark: SparkSession, path: str, snap: int) -> list[dict]:
-    m = _read_manifest(spark, path, snap)
-    has_meta = "meta" in m.columns  # pre-stats tables stay readable
-    rows = sorted((r.asDict() for r in m.collect()), key=lambda r: r["seq"])
-    if not has_meta:
-        for r in rows:
-            r["meta"] = None
-    return rows
-
-
-def _manifest_entries(
-    spark: SparkSession, path: str, snap: int
-) -> list[tuple[str, str, int, str | None]]:
+def _manifest_entries(path: str, snap: int) -> list[tuple[str, str, int, str | None]]:
     return [
         (r["file"], r["kind"], int(r["epoch_id"]), r["meta"])
-        for r in _manifest_rows(spark, path, snap)
+        for r in _manifest_rows(path, snap)
     ]
+
+
+def _epoch_applied(path: str, snap: int, epoch_id: int) -> bool:
+    """The streaming applied-check: is ``epoch_id`` stamped on any entry of
+    snapshot ``snap``'s manifest?"""
+    return any(r["epoch_id"] == int(epoch_id) for r in _manifest_rows(path, snap))
 
 
 def create_table(
@@ -816,7 +889,6 @@ def create_table(
     sc = _stats_cols(path)
     bc, bb = _bloom_spec(path)
     _commit(
-        spark,
         path,
         1,
         [(f, "data", -1, _footer_meta(f, sc, bc, bb)) for f in files],
@@ -854,14 +926,14 @@ def append_snapshot(
             # applied-check reads the CURRENT manifest — dropping the epoch
             # history here would make it re-append the last batches
             applied = sorted(
-                {e for _, _, e, _ in _manifest_entries(spark, path, cur) if e >= 0}
+                {e for _, _, e, _ in _manifest_entries(path, cur) if e >= 0}
             )
             prev = [("", "epoch_marker", e, None) for e in applied]
         else:
-            prev = _manifest_entries(spark, path, cur)
+            prev = _manifest_entries(path, cur)
         return prev + new
 
-    return _retrying_commit(spark, path, build, branch=branch)
+    return _retrying_commit(path, build, branch=branch)
 
 
 def delete_where(
@@ -890,9 +962,9 @@ def delete_where(
     new = [(f, "delete", -1, meta) for f in files]
 
     def build(cur_):
-        return _manifest_entries(spark, path, cur_) + new
+        return _manifest_entries(path, cur_) + new
 
-    return _retrying_commit(spark, path, build, branch=branch)
+    return _retrying_commit(path, build, branch=branch)
 
 
 def delete_where_positions(
@@ -919,7 +991,7 @@ def delete_where_positions(
     cur = _ref_head(path, branch)
     if cur is None:
         raise ValueError(f"no versioned table or branch {branch!r} at {path}")
-    rows = _manifest_rows(spark, path, cur)
+    rows = _manifest_rows(path, cur)
     files = [r["file"] for r in rows if r["kind"] == "data"]
     if not files:
         raise ValueError(f"versioned table at {path} has no data files")
@@ -935,9 +1007,9 @@ def delete_where_positions(
     new = [(f, "posdelete", -1, meta) for f in dfiles]
 
     def build(cur_):
-        return _manifest_entries(spark, path, cur_) + new
+        return _manifest_entries(path, cur_) + new
 
-    return _retrying_commit(spark, path, build, branch=branch)
+    return _retrying_commit(path, build, branch=branch)
 
 
 def delete_where_cow(
@@ -978,7 +1050,7 @@ def delete_where_cow(
     cur = _ref_head(path, branch)
     if cur is None:
         raise ValueError(f"no versioned table or branch {branch!r} at {path}")
-    entries = _manifest_rows(spark, path, cur)
+    entries = _manifest_rows(path, cur)
     cand = {
         r["file"]
         for r in entries
@@ -1002,7 +1074,7 @@ def delete_where_cow(
     ]
 
     def build(cur_):
-        ents = _manifest_entries(spark, path, cur_)
+        ents = _manifest_entries(path, cur_)
         live = {f for f, k, _, _ in ents if k == "data"}
         if not cand <= live:
             raise RuntimeError(
@@ -1029,7 +1101,7 @@ def delete_where_cow(
         kept = [e for e in ents if not (e[1] == "data" and e[0] in cand)]
         return kept + new
 
-    return _retrying_commit(spark, path, build, branch=branch)
+    return _retrying_commit(path, build, branch=branch)
 
 
 def upsert_snapshot(
@@ -1065,9 +1137,9 @@ def upsert_snapshot(
     ]
 
     def build(cur):
-        return _manifest_entries(spark, path, cur) + new
+        return _manifest_entries(path, cur) + new
 
-    return _retrying_commit(spark, path, build, branch=branch)
+    return _retrying_commit(path, build, branch=branch)
 
 
 def read_table(
@@ -1110,7 +1182,7 @@ def read_table(
         snap = current_snapshot(path) if snapshot is None else int(snapshot)
     if snap is None:
         raise ValueError(f"no versioned table at {path}")
-    rows = _manifest_rows(spark, path, snap)
+    rows = _manifest_rows(path, snap)
     data = [
         (r["file"], r["seq"], r["meta"]) for r in rows if r["kind"] == "data"
     ]
@@ -1228,13 +1300,13 @@ def read_appends_since(
     old = (
         {
             r["file"]
-            for r in _manifest_rows(spark, path, since_snapshot)
+            for r in _manifest_rows(path, since_snapshot)
             if r["kind"] == "data"
         }
         if since_snapshot > 0
         else set()
     )
-    hi_rows = _manifest_rows(spark, path, hi)
+    hi_rows = _manifest_rows(path, hi)
     hi_data = [(r["file"], r["meta"]) for r in hi_rows if r["kind"] == "data"]
     new = [(f, m) for f, m in hi_data if f not in old]
     if old and hi_data and not (old & {f for f, _ in hi_data}):
@@ -1458,7 +1530,7 @@ def expire_snapshots(
     keep = set(snaps[-max(1, keep_last):]) | {cur} | heads
     referenced: set[str] = set()
     for snap in keep:
-        for r in _manifest_rows(spark, path, snap):
+        for r in _manifest_rows(path, snap):
             if r["file"]:  # epoch_marker rows carry no path
                 p = os.path.abspath(r["file"])
                 referenced.add(p)
@@ -1517,14 +1589,8 @@ def append_snapshot_epoch(
     cur = _ref_head(path, branch)
     if cur is None and branch != "main":
         raise ValueError(f"no versioned table or branch {branch!r} at {path}")
-    if cur is not None:
-        applied = (
-            _read_manifest(spark, path, cur)
-            .filter(F.col("epoch_id") == int(epoch_id))
-            .head(1)
-        )
-        if applied:
-            return None
+    if cur is not None and _epoch_applied(path, cur, epoch_id):
+        return None
     os.makedirs(path, exist_ok=True)
     if cur is None and stats_cols and not os.path.exists(
         os.path.join(path, _PROPS)
@@ -1538,13 +1604,13 @@ def append_snapshot_epoch(
         for f in files
     ]
     if cur is None:
-        _commit(spark, path, 1, new)
+        _commit(path, 1, new)
         return 1
 
     def build(cur_):
-        return _manifest_entries(spark, path, cur_) + new
+        return _manifest_entries(path, cur_) + new
 
-    return _retrying_commit(spark, path, build, branch=branch)
+    return _retrying_commit(path, build, branch=branch)
 
 
 def write_stream_to_versioned(
@@ -1611,18 +1677,18 @@ def rewrite_table_layout(
 
 def snapshot_history(spark: SparkSession, path: str) -> list[dict]:
     """Table history: per retained snapshot, its file counts by kind —
-    the DESCRIBE HISTORY analog."""
-    out = []
-    for d in sorted(os.listdir(_snap_dir(path))):
-        if not d.isdigit():
-            continue
-        m = _read_manifest(spark, path, int(d))
-        counts = {
-            r["kind"]: r["n"]
-            for r in m.groupBy("kind").agg(F.count("*").alias("n")).collect()
+    the DESCRIBE HISTORY analog, counted from the manifests on the
+    driver."""
+    from collections import Counter
+
+    return [
+        {
+            "snapshot": int(d),
+            **Counter(r["kind"] for r in _manifest_rows(path, int(d))),
         }
-        out.append({"snapshot": int(d), **counts})
-    return out
+        for d in sorted(os.listdir(_snap_dir(path)))
+        if d.isdigit()
+    ]
 
 
 def table_files(
@@ -1635,7 +1701,7 @@ def table_files(
     snap = current_snapshot(path) if snapshot is None else int(snapshot)
     if snap is None:
         raise ValueError(f"no versioned table at {path}")
-    m = _read_manifest(spark, path, snap)
+    m = spark.read.parquet(_manifest_path(path, snap))
     if "meta" not in m.columns:  # pre-metadata manifests
         m = m.withColumn("meta", F.lit(None).cast("string"))
     return m.orderBy("seq")

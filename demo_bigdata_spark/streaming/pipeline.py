@@ -384,11 +384,13 @@ def write_upsert_stream(
 
     def _merge(batch_df: DataFrame, epoch_id: int) -> None:
         deduped = batch_df.dropDuplicates(key_cols)
-        try:
-            target = spark.read.parquet(path)
-            merged = merge_upsert(target, deduped, key_cols)
-        except Exception:  # first batch: no target yet
-            merged = deduped
+        # only "nothing written yet" means first batch: an unreadable
+        # target fails the micro-batch instead of being overwritten with
+        # this batch alone
+        target = _read_parquet_if_exists(spark, path)
+        merged = (
+            deduped if target is None else merge_upsert(target, deduped, key_cols)
+        )
         # materialize before overwrite (the source of the write is the path
         # being overwritten); localCheckpoint cuts the lineage safely
         merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
@@ -403,22 +405,28 @@ def write_upsert_stream(
 
 
 def _read_parquet_if_exists(spark, path: str) -> DataFrame | None:
-    """Read ``path``, or return None iff the path does not exist yet.
+    """Read ``path``, or return None iff it holds no state yet.
 
     The distinction is load-bearing for the exactly-once folds below: a bare
     ``except Exception`` would treat ANY read failure (transient FS error,
     corrupt footer mid-write, permissions) as "first epoch" and then
     overwrite the state table with only the current micro-batch — silently
-    discarding all accumulated state. Only the documented no-state error
-    conditions map to None: PATH_NOT_FOUND (nothing written yet) and
-    UNABLE_TO_INFER_SCHEMA (the directory exists but holds no parquet
-    footers — e.g. created empty by a crashed first write; mapping it to
-    "failed" would permanently fail every micro-batch retry). Everything
-    else propagates so foreachBatch fails the micro-batch and Structured
-    Streaming retries it.
+    discarding all accumulated state. "No state" is decided on the driver
+    before Spark is asked: the path is missing (nothing written yet) or
+    holds no visible parquet file (e.g. created empty by a crashed first
+    write; mapping it to "failed" would permanently fail every micro-batch
+    retry). That probe calls no Spark, so it logs no warning either. Of
+    Spark's own failures only the documented no-state conditions
+    (PATH_NOT_FOUND, UNABLE_TO_INFER_SCHEMA — a race with a concurrent
+    delete) map to None; everything else propagates so foreachBatch fails
+    the micro-batch and Structured Streaming retries it.
     """
     from pyspark.errors import AnalysisException
 
+    from demo_bigdata_spark.sources.snapshots import _visible_files
+
+    if not _visible_files(path):
+        return None
     _NO_STATE = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
     try:
         return spark.read.parquet(path)
@@ -440,24 +448,58 @@ def _read_parquet_if_exists(spark, path: str) -> DataFrame | None:
         raise
 
 
+def ledger_epochs(epochs_path: str) -> list[int] | None:
+    """The epoch ids committed in the ledger at ``epochs_path``, sorted and
+    distinct, read on the driver with pyarrow — no Spark job. None iff no
+    epoch can have committed: the directory is missing or holds no visible
+    parquet file. Hidden files (``_SUCCESS``, ``.crc`` checksums, a crashed
+    commit's ``.tmp`` file) are skipped, so ledgers written by Spark's
+    writer and by :func:`commit_epoch` read alike; an unreadable ledger
+    file raises."""
+    import pyarrow.parquet as pq
+
+    from demo_bigdata_spark.sources.snapshots import _visible_files
+
+    files = _visible_files(epochs_path)
+    if not files:
+        return None
+    return sorted(
+        {
+            e
+            for f in files
+            for e in pq.ParquetFile(f).read(columns=["epoch_id"])
+            .column("epoch_id")
+            .to_pylist()
+        }
+    )
+
+
 def epoch_already_applied(spark, epochs_path: str, epoch_id: int) -> bool:
     """True iff ``epoch_id`` is committed in the ledger at ``epochs_path`` —
-    the idempotence check every exactly-once fold performs first."""
-    ledger = _read_parquet_if_exists(spark, epochs_path)
-    return ledger is not None and bool(
-        ledger.filter(F.col("epoch_id") == int(epoch_id)).head(1)
-    )
+    the idempotence check every exactly-once fold performs first. Reads
+    the ledger on the driver (:func:`ledger_epochs`); ``spark`` is unused
+    and kept for the folds' uniform call shape."""
+    return int(epoch_id) in (ledger_epochs(epochs_path) or ())
 
 
 def commit_epoch(spark, epochs_path: str, epoch_id: int) -> None:
     """Append ``epoch_id`` to the ledger — the commit that makes an epoch's
-    appended rows visible to committed-view reads. Always called AFTER the
-    data append: a crash in between leaves only uncommitted rows, and the
-    deterministic replay appends identical rows that the committed view's
-    dedup collapses."""
-    spark.createDataFrame([(int(epoch_id),)], "epoch_id long").write.mode(
-        "append"
-    ).parquet(epochs_path)
+    appended rows visible to committed-view reads built after it. One
+    one-row parquet file (``epoch_id long``, the ledger's schema) written
+    on the driver with pyarrow: a hidden temporary file, then an atomic
+    rename, so a crash mid-commit leaves nothing any reader sees. Always
+    called AFTER the data append: a crash in between leaves only
+    uncommitted rows, and the deterministic replay appends identical rows
+    that the committed view's dedup collapses. ``spark`` is unused and kept
+    for the folds' uniform call shape."""
+    import pyarrow as pa
+
+    from demo_bigdata_spark.sources.snapshots import _write_parquet_file
+
+    _write_parquet_file(
+        pa.table({"epoch_id": pa.array([int(epoch_id)], pa.int64())}),
+        epochs_path,
+    )
 
 
 def committed_view(
@@ -467,10 +509,16 @@ def committed_view(
     dedup_keys: list[str],
     empty_schema: str,
 ) -> DataFrame:
-    """Committed view of an incrementally-appended table: rows semi-joined
-    to the epoch ledger (crash leftovers excluded), deduplicated on
+    """Committed view of an incrementally-appended table: rows of committed
+    epochs only (crash leftovers excluded), deduplicated on
     ``dedup_keys`` — replays append identical rows, so the dedup is exact.
     Returns an empty frame with ``empty_schema`` before the first commit.
+
+    The ledger is read when the reader is BUILT (:func:`ledger_epochs`) and
+    becomes a plan-time ``epoch_id IN (...)`` filter — no ledger join, no
+    broadcast job per query; the filter pushes into the parquet scan. An
+    epoch committed after the frame was built is not in it: rebuild the
+    reader to see it (the row files are listed at build time as well).
 
     ``dedup_keys`` MUST include any partition/bucket column callers filter
     on (term_bucket, cluster, ...): dropDuplicates compiles to an
@@ -479,11 +527,11 @@ def committed_view(
     silently turns every pruned probe into a full-index scan. The extra
     key never changes semantics when it is functionally dependent on the
     others (a bucket is a pure function of its term/cluster)."""
-    ledger = _read_parquet_if_exists(spark, epochs_path)
+    epochs = ledger_epochs(epochs_path)
     rows = _read_parquet_if_exists(spark, rows_path)
-    if rows is None or ledger is None:
+    if rows is None or epochs is None:
         return spark.createDataFrame([], empty_schema)
-    return rows.join(ledger, "epoch_id", "left_semi").dropDuplicates(dedup_keys)
+    return rows.filter(F.col("epoch_id").isin(epochs)).dropDuplicates(dedup_keys)
 
 
 def committed_view_epoch_partitioned(
@@ -495,11 +543,11 @@ def committed_view_epoch_partitioned(
     """Committed view of a table maintained by IDEMPOTENT per-epoch
     partition overwrites (``<rows_path>/epoch_id=<k>``, each fold writing
     its epoch's rows with ``mode("overwrite")`` into that one directory):
-    the ledger semi-join alone — NO dedup shuffle (r14, r13 VERDICT item
-    4). The exactly-once argument, per layout rather than per reader:
+    the committed-epoch filter alone — NO dedup shuffle (r14, r13 VERDICT
+    item 4). The exactly-once argument, per layout rather than per reader:
 
     - a crash BEFORE the ledger commit leaves rows only in an uncommitted
-      epoch directory — invisible through the semi-join (unchanged
+      epoch directory — invisible through the filter (unchanged
       correctness line);
     - the deterministic replay of an uncommitted epoch OVERWRITES that
       same directory, so the committed table can never hold two copies of
@@ -509,15 +557,19 @@ def committed_view_epoch_partitioned(
       ``epoch_already_applied`` first), so the directory is immutable
       once visible.
 
+    As in :func:`committed_view` the ledger is captured when the reader is
+    built; here the ``epoch_id IN (...)`` filter is a PARTITION filter, so
+    uncommitted epoch directories are never even listed into the scan.
     ``epoch_id`` comes back as a directory-inferred partition column
     (int); it is cast to long to keep the documented schema. Returns an
     empty frame with ``empty_schema`` before the first commit."""
-    ledger = _read_parquet_if_exists(spark, epochs_path)
+    epochs = ledger_epochs(epochs_path)
     rows = _read_parquet_if_exists(spark, rows_path)
-    if rows is None or ledger is None:
+    if rows is None or epochs is None:
         return spark.createDataFrame([], empty_schema)
-    rows = rows.withColumn("epoch_id", F.col("epoch_id").cast("long"))
-    return rows.join(ledger, "epoch_id", "left_semi")
+    return rows.filter(F.col("epoch_id").isin(epochs)).withColumn(
+        "epoch_id", F.col("epoch_id").cast("long")
+    )
 
 
 def combine_hourly_partial(
@@ -540,11 +592,7 @@ def combine_hourly_partial(
     from pyspark.sql import functions as F
 
     epochs_path = path + "_epochs"
-    ledger = _read_parquet_if_exists(spark, epochs_path)
-    applied = (
-        {r["epoch_id"] for r in ledger.collect()} if ledger is not None else set()
-    )
-    if epoch_id in applied:
+    if epoch_already_applied(spark, epochs_path, epoch_id):
         return
     part = batch_df.groupBy(
         F.date_trunc("hour", F.col(ts_col)).alias("bucket")
@@ -559,9 +607,7 @@ def combine_hourly_partial(
     else:  # first epoch: no state yet
         merged = part
     merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
-    spark.createDataFrame([(int(epoch_id),)], "epoch_id long").write.mode("append").parquet(
-        epochs_path
-    )
+    commit_epoch(spark, epochs_path, epoch_id)
 
 
 def incremental_hourly_stats(
@@ -647,11 +693,7 @@ def combine_sketch_partial(
     from pyspark.sql import functions as F
 
     epochs_path = path + "_epochs"
-    ledger = _read_parquet_if_exists(spark, epochs_path)
-    applied = (
-        {r["epoch_id"] for r in ledger.collect()} if ledger is not None else set()
-    )
-    if epoch_id in applied:
+    if epoch_already_applied(spark, epochs_path, epoch_id):
         return
     part = batch_df.groupBy(F.to_date(F.col(ts_col)).alias("day")).agg(
         F.hll_sketch_agg(F.col(key_col), F.lit(lgk)).alias("sketch")
@@ -666,9 +708,7 @@ def combine_sketch_partial(
     else:  # first epoch: no state yet
         merged = part
     merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
-    spark.createDataFrame([(int(epoch_id),)], "epoch_id long").write.mode("append").parquet(
-        epochs_path
-    )
+    commit_epoch(spark, epochs_path, epoch_id)
 
 
 def incremental_distinct_sketches(
@@ -770,11 +810,7 @@ def combine_cms_partial(
     from demo_bigdata_spark.operators.sketches import merge_count_min
 
     epochs_path = path + "_epochs"
-    ledger = _read_parquet_if_exists(spark, epochs_path)
-    applied = (
-        {r["epoch_id"] for r in ledger.collect()} if ledger is not None else set()
-    )
-    if epoch_id in applied:
+    if epoch_already_applied(spark, epochs_path, epoch_id):
         return
     part_rows = (
         batch_df.groupBy(F.to_date(F.col(ts_col)).alias("day"))
@@ -802,9 +838,7 @@ def combine_cms_partial(
     spark.createDataFrame(
         sorted(merged.items()), "day string, blob binary"
     ).write.mode("overwrite").parquet(path)
-    spark.createDataFrame([(int(epoch_id),)], "epoch_id long").write.mode(
-        "append"
-    ).parquet(epochs_path)
+    commit_epoch(spark, epochs_path, epoch_id)
 
 
 def incremental_token_frequencies(
@@ -882,20 +916,17 @@ def combine_pack_partial(
     recomputes the identical base, appends byte-identical rows, then
     commits the epoch; the stale first copy is an exact duplicate that
     ``read_pack_assignments`` removes with a (doc_id, epoch_id) dedup over
-    the ledger semi-join. No gap, no double-advance, deterministic layout.
+    the committed epochs. No gap, no double-advance, deterministic layout.
     """
     from demo_bigdata_spark.operators.text import pack_sequences
 
     epochs_path = path + "_epochs"
-    ledger = _read_parquet_if_exists(spark, epochs_path)
-    applied = (
-        {r["epoch_id"] for r in ledger.collect()} if ledger is not None else set()
-    )
+    applied = ledger_epochs(epochs_path) or []
     if epoch_id in applied:
         return
     state = _read_parquet_if_exists(spark, path)
     if state is not None and applied:
-        committed = state.filter(F.col("epoch_id").isin([int(e) for e in applied]))
+        committed = state.filter(F.col("epoch_id").isin(applied))
         base = (
             committed.agg(
                 F.max(F.col("tok_offset") + F.col("n_tokens")).alias("m")
@@ -922,26 +953,21 @@ def combine_pack_partial(
     # pin before writing so the batch plan runs once
     assigned = assigned.localCheckpoint(eager=True)
     assigned.write.mode("append").parquet(path)
-    spark.createDataFrame([(int(epoch_id),)], "epoch_id long").write.mode(
-        "append"
-    ).parquet(epochs_path)
+    commit_epoch(spark, epochs_path, epoch_id)
 
 
 def read_pack_assignments(spark, path: str) -> DataFrame:
     """The committed view of the continuous pack layout: assignment rows
-    semi-joined to the epoch ledger (uncommitted crash leftovers excluded),
+    of committed epochs (uncommitted crash leftovers excluded),
     deduplicated on (doc_id, epoch_id) — replayed epochs write byte-identical
     rows (see combine_pack_partial), so the dedup is exact, not lossy."""
-    ledger = _read_parquet_if_exists(spark, path + "_epochs")
-    rows = _read_parquet_if_exists(spark, path)
-    if rows is None or ledger is None:
-        schema = (
-            "doc_id long, n_tokens long, tok_offset long, pack_id long, "
-            "pack_offset long, spans_boundary boolean, epoch_id long"
-        )
-        return spark.createDataFrame([], schema)
-    return rows.join(ledger, "epoch_id", "left_semi").dropDuplicates(
-        ["doc_id", "epoch_id"]
+    return committed_view(
+        spark,
+        path,
+        path + "_epochs",
+        ["doc_id", "epoch_id"],
+        "doc_id long, n_tokens long, tok_offset long, pack_id long, "
+        "pack_offset long, spans_boundary boolean, epoch_id long",
     )
 
 
@@ -1036,7 +1062,7 @@ def append_contamination_flags(
 
 def read_contamination_flags(spark, out_path: str, id_col: str = "doc_id") -> DataFrame:
     """Committed view of the incrementally-maintained contamination flags:
-    ledger semi-join + (doc, epoch) dedup — the exactly-once read."""
+    committed-epoch filter + (doc, epoch) dedup — the exactly-once read."""
     return committed_view(
         spark,
         out_path,
@@ -1270,10 +1296,10 @@ def append_span_batch_counted(
 
 
 def read_span_flags(spark, out_path: str, id_col: str = "doc_id") -> DataFrame:
-    """Committed view of the incrementally-maintained span flags: ledger
-    semi-join + (id, start, epoch) dedup — feed these starts to the same
-    coverage/reassembly tail as the batch operator to materialize the
-    deduplicated text."""
+    """Committed view of the incrementally-maintained span flags:
+    committed-epoch filter + (id, start, epoch) dedup — feed these starts
+    to the same coverage/reassembly tail as the batch operator to
+    materialize the deduplicated text."""
     return committed_view(
         spark,
         out_path + "_flags",
@@ -1360,7 +1386,7 @@ def read_quality_scores(
     spark, out_path: str, id_col: str = "doc_id"
 ) -> DataFrame:
     """Committed view of the incrementally-maintained quality scores:
-    ledger semi-join + (doc, epoch) dedup — the exactly-once read the
+    committed-epoch filter + (doc, epoch) dedup — the exactly-once read the
     downstream quality filter consumes."""
     return committed_view(
         spark,
@@ -1773,7 +1799,7 @@ def append_edge_batch(
 
 def read_edge_counts(spark, out_path: str) -> DataFrame:
     """Committed weighted edges over the incrementally-appended per-epoch
-    counts: semi-join the ledger (crash leftovers invisible), dedup on
+    counts: committed epochs only (crash leftovers invisible), dedup on
     (src, dst, epoch) so a replay's identical rows collapse, then SUM —
     fold == batch exactly (integer counts)."""
     rows = committed_view(

@@ -4943,15 +4943,11 @@ def _incremental_dedup_index(spark, sf_dir):
         + sf_dir.rstrip("/").rsplit("/", 1)[-1]
         + f"_{os.getpid()}"
     )
-    # ONE ledger read decides all three epochs' idempotence checks (the
-    # ledger is epoch-count-sized, bounded); the per-epoch
-    # epoch_already_applied probe inside append_dedup_batch re-reads the
-    # ledger per epoch, which the CONSTRUCT_TIMED bench rows would re-pay
-    # on every timed construction
-    from demo_bigdata_spark.streaming.pipeline import _read_parquet_if_exists
+    # ONE ledger read decides all three epochs' idempotence checks, so an
+    # already-built index returns before the corpus is even planned
+    from demo_bigdata_spark.streaming.pipeline import ledger_epochs
 
-    ledger = _read_parquet_if_exists(spark, path + "_epochs")
-    done = {r.epoch_id for r in ledger.collect()} if ledger is not None else set()
+    done = set(ledger_epochs(path + "_epochs") or ())
     if done >= {0, 1, 2}:
         return path
     docs = _docs(spark, sf_dir).select("doc_id", "text")

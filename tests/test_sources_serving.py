@@ -788,7 +788,7 @@ def test_versioned_table_commit_claims_and_vacuum_safety(spark, tmp_path):
     claim = S._claim_path(path, nxt)
     _os.close(_os.open(claim, _os.O_CREAT | _os.O_EXCL | _os.O_WRONLY))
     with _pytest.raises(S.CommitConflictError):
-        S._commit(spark, path, nxt, [("", "epoch_marker", 0, None)])
+        S._commit(path, nxt, [("", "epoch_marker", 0, None)])
     # ... and an id at-or-below current conflicts outright
     _os.remove(claim)
     with _pytest.raises(S.CommitConflictError):
@@ -851,7 +851,7 @@ def test_versioned_table_manifest_stats_prune_files(spark, tmp_path):
     # manifest carries bounds for every data file — one entry per PART
     # FILE (round-8: per-file footer-harvested statistics), spanning the
     # three commit directories
-    rows = S._manifest_rows(spark, path, S.current_snapshot(path))
+    rows = S._manifest_rows(path, S.current_snapshot(path))
     datas = [r for r in rows if r["kind"] == "data"]
     assert len({r["file"].rsplit("/", 2)[-2] for r in datas}) == 3
     assert all(not _os.path.isdir(r["file"]) for r in datas)
@@ -879,7 +879,7 @@ def test_versioned_table_manifest_stats_prune_files(spark, tmp_path):
     )
     assert {r.k for r in pruned2.collect()} == set(range(100, 120)) - {101}
     # the delete file's key column came from the manifest
-    mrows = S._manifest_rows(spark, path, S.current_snapshot(path))
+    mrows = S._manifest_rows(path, S.current_snapshot(path))
     dmeta = [r["meta"] for r in mrows if r["kind"] == "delete"]
     assert dmeta and _json.loads(dmeta[0])["key_col"] == "k"
 
@@ -920,7 +920,7 @@ def test_stream_born_table_declares_stats_cols(spark, tmp_path):
     df = spark.createDataFrame([(1, 5), (2, 6)], "k long, v long")
     S.append_snapshot_epoch(spark, path, df, 0, stats_cols=["k"])
     S.append_snapshot_epoch(spark, path, df.withColumn("k", F.col("k") + 10), 1)
-    rows = S._manifest_rows(spark, path, S.current_snapshot(path))
+    rows = S._manifest_rows(path, S.current_snapshot(path))
     datas = [r for r in rows if r["kind"] == "data"]
     assert len({r["file"].rsplit("/", 2)[-2] for r in datas}) == 2
     assert all(
@@ -1041,7 +1041,7 @@ def test_versioned_table_per_file_stats_prune_inside_commit(spark, tmp_path):
 
     datas = [
         r
-        for r in S._manifest_rows(spark, path, 1)
+        for r in S._manifest_rows(path, 1)
         if r["kind"] == "data"
     ]
     assert len(datas) == 8  # one manifest entry per part file
@@ -1090,9 +1090,9 @@ def test_versioned_table_footer_stats_fail_open_observable(spark, tmp_path):
     snap = S.current_snapshot(path)
     entries = [
         (f, kind, e, meta if kind == "data" else m)
-        for f, kind, e, m in S._manifest_entries(spark, path, snap)
+        for f, kind, e, m in S._manifest_entries(path, snap)
     ]
-    S._commit(spark, path, snap + 1, entries)
+    S._commit(path, snap + 1, entries)
     pr = S.read_table(spark, path, prune={"k": (2, None)})
     assert {r.k for r in pr.collect()} == {2, 3}
     tf = [
@@ -1299,9 +1299,9 @@ def test_versioned_table_legacy_dir_manifests_still_read(spark, tmp_path):
 
     # hand-commit a LEGACY directory entry (what round-7 wrote)
     d = _os.path.dirname(
-        [r["file"] for r in S._manifest_rows(spark, path, 1)][0]
+        [r["file"] for r in S._manifest_rows(path, 1)][0]
     )
-    S._commit(spark, path, 2, [(d, "data", -1, None)])
+    S._commit(path, 2, [(d, "data", -1, None)])
     assert {r.k for r in S.read_table(spark, path)
             .collect()} == {1, 2}
 
@@ -1422,7 +1422,7 @@ def test_versioned_table_branch_commit_claims_and_global_ids(spark, tmp_path):
     claim = S._claim_path(path, 4, "b")
     _os.close(_os.open(claim, _os.O_CREAT | _os.O_EXCL | _os.O_WRONLY))
     with _pytest.raises(S.CommitConflictError):
-        S._commit(spark, path, 4, [("", "epoch_marker", 0, None)], branch="b")
+        S._commit(path, 4, [("", "epoch_marker", 0, None)], branch="b")
     _os.remove(claim)
     # ... and after release the branch commits fine, to a fresh global id
     s2 = S.append_snapshot(spark, path, spark.createDataFrame([(5,)], "k long"), branch="b")
@@ -1607,12 +1607,12 @@ def test_versioned_table_cow_delete_aborts_on_concurrent_delete(
 
     orig = S._retrying_commit
 
-    def hijack(spark_, p, build, branch="main"):
+    def hijack(p, build, branch="main"):
         # restore first so the interleaved MOR delete commits normally,
         # then hand the COW build to the real commit loop
         monkeypatch.setattr(S, "_retrying_commit", orig)
-        S.delete_where(spark_, p, "k", F.col("k") == 1)
-        return orig(spark_, p, build, branch=branch)
+        S.delete_where(spark, p, "k", F.col("k") == 1)
+        return orig(p, build, branch=branch)
 
     monkeypatch.setattr(S, "_retrying_commit", hijack)
     with _pytest.raises(RuntimeError, match="concurrent delete"):
